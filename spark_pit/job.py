@@ -50,9 +50,11 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--chunk-seconds", type=int, default=86400)
     p.add_argument("--num-parts", type=int, default=64)
     p.add_argument("--num-buckets", type=int, default=None,
-                   help="PIT kernel bucket count; default = max(256, "
-                        "rows/50k) — data-derived ~50k-row pandas buckets "
-                        "(BENCH.md round 5: core-derived counts straggle)")
+                   help="cardinality B of the PIT kernel's bucket key "
+                        "(the most shuffle partitions that hold data; AQE "
+                        "sizes the stage and the kernel runs once per Arrow "
+                        "batch, so B sets no per-call cost); default = "
+                        "max(256, rows/50k)")
     p.add_argument("--parts-per-batch", type=int, default=16)
     p.add_argument("--input-snapshot", default="",
                    help="lineage tag recorded in the manifest")

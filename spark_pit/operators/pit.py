@@ -9,12 +9,12 @@ Fuses into ONE per-entity pass — a single shuffle for the whole feature set:
 - trailing-window token composition (EAAC analogue) as array<double>
 - trailing-window rolling mean of the numeric channel
 
-Physical shape (SURVEY.md §4 partitioning row): both sides are hash-
-partitioned on the entity by ``groupBy(entity).cogroup``, each group is
-sorted once in pandas, then every kernel (kernels.py) runs vectorized on the
-same sorted arrays. On a cluster the equivalent declarative plan would pay
-one exchange per window family; the fused cursor pays exactly one, which is
-the reason this operator exists.
+Physical shape (SURVEY.md §4 partitioning row): ``pit_features_bucketed``
+unions events and snapshots into one stream, hash-partitions it on a bucket
+key of B values, sorts each partition by entity in the JVM and runs every
+feature vectorized once per Arrow batch. On a cluster the equivalent declarative
+plan would pay one exchange per window family; the fused pass pays exactly
+one, which is the reason this operator exists.
 
 A declarative twin (``pit_features_declarative``) builds the same columns
 from the windows/asof operator library; tests assert both paths are equal
@@ -27,6 +27,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from spark_pit import kernels
 from spark_pit.operators import windows
@@ -143,6 +144,40 @@ def pit_features_cursor(
     return ev.groupBy(entity).cogroup(sn.groupBy(entity)).applyInPandas(kern, out_schema)
 
 
+def _seg_starts(ids: np.ndarray) -> np.ndarray:
+    """True where a sorted entity column starts a new entity."""
+    s = np.ones(len(ids), dtype=bool)
+    s[1:] = ids[1:] != ids[:-1]
+    if ids.dtype.kind == "f":  # null ids are one entity, as in groupBy
+        s[1:] &= ~(np.isnan(ids[1:]) & np.isnan(ids[:-1]))
+    return s
+
+
+def _whole_entities(batches, entity: str):
+    """Regroup a partition's Arrow batches, sorted by entity, into frames
+    of whole entities. A batch's last entity may continue in the next
+    batch: it is held as a list of chunks and concatenated once, when it
+    closes — never re-concatenated as it grows."""
+    def cat(chunks):
+        return chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+
+    carry, last = [], None  # chunks of the still-open entity, and its id
+    for b in batches:
+        if not len(b):
+            continue
+        ids = b[entity].to_numpy()
+        k = np.flatnonzero(_seg_starts(ids))[-1]  # the last entity's first row
+        if k == 0 and carry and not _seg_starts(np.concatenate([last, ids[:1]]))[1]:
+            carry.append(b)  # b continues the open entity
+            continue
+        closed = [c for c in (*carry, b.iloc[:k]) if len(c)]
+        carry, last = [b.iloc[k:]], ids[-1:]
+        if closed:
+            yield cat(closed)
+    if carry:
+        yield cat(carry)
+
+
 def pit_features_bucketed(
     events: DataFrame,
     snapshots: DataFrame,
@@ -159,27 +194,34 @@ def pit_features_bucketed(
     num_buckets: int = 256,
     passthrough: list[str] | None = None,
 ) -> DataFrame:
-    """pit_features_cursor semantics at bucket granularity: entities are
-    hashed into ``num_buckets`` groups (``pmod(xxhash64(entity), B)``) and
-    each task processes a whole bucket with **segment-vectorized** NumPy —
-    zero per-entity Python. This is the production path:
+    """pit_features_cursor semantics over ONE sorted stream per partition,
+    with **segment-vectorized** NumPy — zero per-entity Python. This is the
+    production path; hot entities go through spark_pit.operators.skew.
 
-    - per-group overhead (Arrow batch, pandas construction, Python dispatch)
-      is paid B times instead of once per entity — at sf0.1 that is 256
-      batches instead of ~60k, a ~10x wall-clock win measured by bench.py;
-    - task count is bounded and uniform (hash buckets), the right shape for
-      a 1000-executor cluster; hot entities go through
-      spark_pit.operators.skew instead.
+    Events (tag 0) and snapshots (tag 1) are unioned and moved by ONE
+    exchange on the bucket key ``pmod(xxhash64(entity), B)``; B =
+    ``num_buckets`` is the key's cardinality (it caps the partitions that
+    hold data; AQE sizes the stage). The JVM sorts each partition by
+    entity and ``mapInPandas`` runs the kernel once per Arrow batch, not
+    once per bucket (the former cogroup's Python workers ran 0.28 s, 0.79 s
+    and 2.50 s on the same 84,416 rows at 4, 32 and 128 buckets: ~18 ms
+    per call). An entity spanning batches is held as chunks and processed
+    once, when it closes. Within entities one numpy lexsort orders rows by
+    (ts, tag, tiebreak, snapshot id): a JVM sort on all those keys took
+    12.4 s of task time at 6.4M rows, against 0.5 s for the entity alone.
 
-    Segment trick: rows sort by (entity, ts, tiebreak) inside the bucket;
-    ``seg_first[i]`` = index of row i's entity's first row. Every window
-    feature is then a cumulative-array expression clipped at seg_first, and
-    the as-of match is one ``pd.merge_asof(by=entity)`` (C implementation).
-    Equivalence with the per-entity cursor is asserted in tests.
+    Segment trick: ``seg_first[i]`` = index of row i's entity's first row;
+    every window feature is a cumulative-array expression clipped at it.
+    The as-of match is a forward-fill of the latest snapshot row: snapshots
+    order after events at equal ts (strictly before) and by ascending id
+    (the max id wins ties). Equivalence with the cursor is asserted in tests.
     """
+    if not vocab:
+        raise ValueError("pit_features_bucketed: vocab is empty (no wc columns)")
     code = {t: i for i, t in enumerate(vocab)}
     V = len(vocab)
-    ent_type = events.schema[entity].dataType.simpleString()
+    TAG, SID = "__tag", "__sid"  # stream row kind (0 event, 1 snapshot), snapshot id
+    typ = {f.name: f.dataType for f in events.schema.fields}
     # tiebreak may be one dedicated column (emitted in the output, e.g.
     # event_id) or a LIST of columns already among the kernel inputs
     # (numeric/token/passthrough) — the list form lets callers get a fully
@@ -187,106 +229,60 @@ def pit_features_bucketed(
     # which would cost a whole extra sort exchange before the kernel
     tb = [tiebreak] if isinstance(tiebreak, str) else list(tiebreak or [])
     pt = list(passthrough or [])
-    shared = {numeric_col, token_col, *pt}
-    tb_ded = [c for c in tb if c not in shared]  # dedicated tiebreak columns
-    tb_field = "".join(
-        f"{c} {events.schema[c].dataType.simpleString()}, " for c in tb_ded
-    )
-    pt_fields = "".join(
-        f", {c} {events.schema[c].dataType.simpleString()}" for c in pt
-    )
+    tb_ded = [c for c in tb if c not in {numeric_col, token_col, *pt}]
+    payload = [*tb_ded, numeric_col, token_col, *pt]
     # the kernel emits the window composition as V separate double columns
     # (zero-copy columnar Arrow); the caller-visible array<double> is
     # assembled JVM-side in the final projection. A pandas object column
     # of per-row ndarrays converts to an Arrow list per ELEMENT — at 64M
     # rows that conversion dominated the kernel stage (guide §4.1: control
     # how efficiently columns cross the boundary).
-    wc_fields = ", ".join(f"__wc{i} double" for i in range(V))
-    out_schema = (
-        f"{entity} {ent_type}, {ts} timestamp_ntz, {tb_field}"
-        f"{numeric_col} double, {token_col} string, "
-        f"asof_snapshot_id long, asof_age_sec double, "
-        f"lag1_{numeric_col} double, lead1_{numeric_col} double, "
-        f"session_id long, session_pos long, "
-        f"{numeric_col}_bf double, roll_mean_{numeric_col} double, "
-        f"{wc_fields}" + pt_fields
-    )
+    head = [
+        f"{entity} {typ[entity].simpleString()}", f"{ts} timestamp_ntz",
+        *(f"{c} {typ[c].simpleString()}" for c in tb_ded),
+        f"{numeric_col} double", f"{token_col} string",
+        "asof_snapshot_id long", "asof_age_sec double",
+        f"lag1_{numeric_col} double", f"lead1_{numeric_col} double",
+        "session_id long", "session_pos long",
+        f"{numeric_col}_bf double", f"roll_mean_{numeric_col} double"]
+    out_schema = ", ".join([*head, *(f"__wc{i} double" for i in range(V)),
+                            *(f"{c} {typ[c].simpleString()}" for c in pt)])
     gap_us = gap_seconds * 1_000_000
 
-    def kern(ev: pd.DataFrame, sn: pd.DataFrame) -> pd.DataFrame:
-        if len(ev) == 0:
-            return pd.DataFrame(
-                columns=[f.strip().split(" ")[0] for f in out_schema.split(",")]
-            )
-        # numeric lexsort instead of pandas sort_values: string keys
-        # (entity ids, token tiebreaks) are factorized to order-preserving
-        # codes first, so the per-bucket sort never compares Python objects
-        # — measured ~1.7x kernel wall on 6.4M-row string-keyed input
-        sort_keys = []
-        for c in reversed([entity, ts, *tb]):
-            col = ev[c]
-            if col.dtype == object:
-                codes, uniq = pd.factorize(col, sort=True)
-                # factorize maps nulls to -1 (sorts FIRST); remap to
-                # len(uniq) so nulls sort LAST, preserving the former
-                # sort_values NaN-last total order (judge round-2 advice)
-                sort_keys.append(np.where(codes < 0, len(uniq), codes))
-            else:
-                sort_keys.append(col.to_numpy())
-        ev = ev.iloc[np.lexsort(sort_keys)].reset_index(drop=True)
-        n = len(ev)
-        ts_us = ev[ts].to_numpy().astype("datetime64[us]").astype(np.int64)
-        x = ev[numeric_col].to_numpy(dtype=np.float64)
-        codes = ev[token_col].map(code).fillna(-1).to_numpy(dtype=np.int64)
+    def features(g: pd.DataFrame) -> pd.DataFrame:
+        """All features of the event rows of whole entities ``g``."""
+        seg = np.cumsum(_seg_starts(g[entity].to_numpy()))
+        ts_us = g[ts].to_numpy().astype("datetime64[us]").astype(np.int64)
+        # order within entities; strings become sorted codes, nulls last
+        keys = [g[c].to_numpy() for c in (SID, *reversed(tb))]
+        keys = [pd.factorize(v, sort=True, use_na_sentinel=False)[0]
+                if v.dtype == object else v for v in keys]
+        tag = g[TAG].to_numpy()
+        order = np.lexsort([*keys, tag, ts_us, seg])
+        seg, ts_us, is_ev = seg[order], ts_us[order], tag[order] == 0
+        # --- as-of: latest snapshot row before each row, same entity ---
+        last_sn = np.maximum.accumulate(np.where(is_ev, -1, np.arange(len(g))))
+        take = last_sn.clip(0)
+        matched = (last_sn >= 0) & (seg[take] == seg)
+        sid = g[SID].to_numpy()[order][take][is_ev]
+        age = np.where(matched, (ts_us - ts_us[take]) / 1e6, np.nan)[is_ev]
+        matched = matched[is_ev]
+        # plain arrays: a frame built from Series would align their indexes
+        ev = {c: g[c].to_numpy()[order[is_ev]] for c in (entity, ts, *payload)}
+        seg, ts_us = seg[is_ev], ts_us[is_ev]
+        n = len(seg)
+        x = ev[numeric_col].astype(np.float64)
+        codes = pd.Series(ev[token_col]).map(code).fillna(-1).to_numpy(dtype=np.int64)
 
-        ids = ev[entity].to_numpy()
-        new_seg = np.empty(n, dtype=bool)
-        new_seg[0] = True
-        new_seg[1:] = ids[1:] != ids[:-1]
-        seg_first = np.where(new_seg, np.arange(n), 0)
-        np.maximum.accumulate(seg_first, out=seg_first)
-        # seg_last[i] = last index of row i's segment: map each segment's
-        # first index to its last, then gather through seg_first
-        ends = np.flatnonzero(np.append(new_seg[1:], True))
-        last_of_seg = np.zeros(n, dtype=np.int64)
-        last_of_seg[seg_first[ends]] = ends
-        seg_last = last_of_seg[seg_first]
         idx_arr = np.arange(n)
-
-        out = pd.DataFrame(
-            {
-                entity: ev[entity],
-                ts: ev[ts],
-                **{c: ev[c] for c in tb_ded},
-                numeric_col: ev[numeric_col],
-                token_col: ev[token_col],
-            }
-        )
-
-        # --- as-of via merge_asof (strictly before; max id wins ties) ---
-        if len(sn):
-            sn2 = sn.sort_values([snap_ts, snap_id], kind="stable")
-            left = pd.DataFrame({entity: ev[entity], ts: ev[ts], "__i": idx_arr})
-            left = left.sort_values(ts, kind="stable")
-            right = pd.DataFrame(
-                {
-                    entity: sn2["__se"] if "__se" in sn2 else sn2[entity],
-                    ts: sn2[snap_ts],
-                    "__sid": sn2[snap_id].to_numpy(dtype=np.int64),
-                    "__sts": sn2[snap_ts].to_numpy().astype("datetime64[us]").astype(np.int64),
-                }
-            ).sort_values(ts, kind="stable")
-            merged = pd.merge_asof(
-                left, right, on=ts, by=entity,
-                allow_exact_matches=False, direction="backward",
-            ).sort_values("__i", kind="stable")
-            out["asof_snapshot_id"] = merged["__sid"].astype("Int64").to_numpy()
-            age = (ts_us - merged["__sts"].to_numpy(dtype=np.float64)) / 1e6
-            age[merged["__sid"].isna().to_numpy()] = np.nan
-            out["asof_age_sec"] = age
-        else:
-            out["asof_snapshot_id"] = pd.array([pd.NA] * n, dtype="Int64")
-            out["asof_age_sec"] = np.nan
+        new_seg = np.diff(seg, prepend=-1) != 0
+        seg_first = np.maximum.accumulate(np.where(new_seg, idx_arr, 0))
+        seg_last = np.append(np.flatnonzero(new_seg[1:]), n - 1)[np.cumsum(new_seg) - 1]
+        out = {
+            **ev,
+            "asof_snapshot_id": pd.arrays.IntegerArray(sid.astype(np.int64), ~matched),
+            "asof_age_sec": age,
+        }
 
         # --- lag/lead clipped at segment bounds ---
         lag1 = np.roll(x, 1)
@@ -297,12 +293,10 @@ def pit_features_bucketed(
         out[f"lead1_{numeric_col}"] = lead1
 
         # --- sessionization: entity change forces a break ---
-        brk = np.empty(n, dtype=np.int64)
-        brk[0] = 1
-        brk[1:] = ((np.diff(ts_us) > gap_us) | new_seg[1:]).astype(np.int64)
+        brk = (np.diff(ts_us, prepend=ts_us[:1]) > gap_us) | new_seg
         gsid = np.cumsum(brk)  # 1-based global session counter
         out["session_id"] = gsid - gsid[seg_first]
-        sess_start = np.where(brk > 0, idx_arr, 0)
+        sess_start = np.where(brk, idx_arr, 0)
         np.maximum.accumulate(sess_start, out=sess_start)
         out["session_pos"] = idx_arr - sess_start
 
@@ -328,27 +322,32 @@ def pit_features_bucketed(
         onehot[idx_arr[valid], codes[valid]] = 1
         ocs = np.concatenate([np.zeros((1, V)), np.cumsum(onehot, axis=0)])
         wcm = (ocs[idx_arr + 1] - ocs[w_s]) / (idx_arr + 1 - w_s)[:, None]
-        for i in range(V):
-            out[f"__wc{i}"] = wcm[:, i]
-        for c in pt:
-            out[c] = ev[c]
-        return out
+        out.update({f"__wc{i}": wcm[:, i] for i in range(V)})
+        return pd.DataFrame(out)
 
-    bkt = F.pmod(F.xxhash64(F.col(entity)), F.lit(num_buckets)).cast("int")
-    ev = events.select(entity, ts, *tb_ded, numeric_col, token_col, *pt).withColumn("__b", bkt)
+    def kern(batches):
+        return (o for o in map(features, _whole_entities(batches, entity)) if len(o))
+
+    # snapshot rows fill integral event-only columns with 0, not null: a null
+    # makes the column float64 in pandas, which rounds ids above 2**53
+    fill = [(F.lit(0) if isinstance(typ[c], T.IntegralType) else F.lit(None))
+            .cast(typ[c]).alias(c) for c in payload]
+    ev = events.select(entity, ts, *payload, F.lit(0).alias(TAG),
+                       F.lit(0).cast("long").alias(SID))
     sn = snapshots.select(
-        F.col(entity).alias("__se"), F.col(snap_ts), F.col(snap_id)
-    ).withColumn("__b", F.pmod(F.xxhash64(F.col("__se")), F.lit(num_buckets)).cast("int"))
-    fused = ev.groupBy("__b").cogroup(sn.groupBy("__b")).applyInPandas(kern, out_schema)
-    # reassemble the array<double> contract from the V flat kernel columns
-    head = [entity, ts, *tb_ded, numeric_col, token_col,
-            "asof_snapshot_id", "asof_age_sec",
-            f"lag1_{numeric_col}", f"lead1_{numeric_col}",
-            "session_id", "session_pos",
-            f"{numeric_col}_bf", f"roll_mean_{numeric_col}"]
-    return fused.select(
-        *head, F.array(*[F.col(f"__wc{i}") for i in range(V)]).alias("wc"), *pt
+        F.col(entity).cast(typ[entity]).alias(entity),
+        F.col(snap_ts).cast(typ[ts]).alias(ts), *fill,
+        F.lit(1).alias(TAG), F.col(snap_id).cast("long").alias(SID),
     )
+    fused = (
+        ev.unionByName(sn)
+        .repartition(F.pmod(F.xxhash64(F.col(entity)), F.lit(num_buckets)))
+        .sortWithinPartitions(F.col(entity).asc_nulls_last())
+        .mapInPandas(kern, out_schema)
+    )
+    # reassemble the array<double> contract from the V flat kernel columns
+    return fused.select(*(f.split(" ")[0] for f in head),
+                        F.array(*[F.col(f"__wc{i}") for i in range(V)]).alias("wc"), *pt)
 
 
 def pit_features_declarative(

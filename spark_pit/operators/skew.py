@@ -34,8 +34,8 @@ entity's timeline fans out over many tasks, while keeping the output
    the right side (no broadcast of the carry table — in all-salted
    equivalence mode it is O(populated chunks), far past broadcast size),
    carried tails are materialized as margin rows, and every feature runs
-   segment-vectorized over (entity, chunk) segments exactly like
-   pit_features_bucketed — per-batch Python cost is paid B times total,
+   segment-vectorized over (entity, chunk) segments like
+   pit_features_bucketed — one pandas call per bucket, B in total,
    independent of how many (entity, chunk) groups exist.
 
 Equivalence proof sketch per feature (tests assert it empirically):
@@ -284,8 +284,8 @@ def _salted_path(
        O(populated chunks), far past broadcast size). Inside the kernel
        the carried tails are materialized as margin rows, concatenated
        with the bucket's body rows, and every feature runs
-       segment-vectorized over (entity, chunk) segments exactly like
-       pit_features_bucketed — per-batch cost is paid B times total,
+       segment-vectorized over (entity, chunk) segments like
+       pit_features_bucketed — one pandas call per bucket, B in total,
        independent of how many (entity, chunk) groups exist.
 
     Bit-identical to pit_features_cursor by the same margin/carry

@@ -108,14 +108,13 @@ def image_pit_features(
     is broken via salted repartitioning") — output identical either way
     (tests/test_skew equivalence + the shared golden fixture).
 
-    ``num_buckets`` sizing: target ~50k-row pandas buckets at the job's
-    DATA scale (rows/50k), never a core multiple — core-derived counts
-    produce few large buckets whose last scheduling wave idles most of an
-    executor's cores behind one straggler (round-5 measurement, BENCH.md:
-    32→128 buckets on 6.4M rows took the 8-core kernel from 640k to 796k
-    rows/s and the 2→8 equal-pressure scaling from 0.74 to 0.86–0.94).
-    Buckets ≫ total cores is the invariant; at 100 TB that's ~2M buckets,
-    which AQE schedules without issue."""
+    ``num_buckets`` is B, the cardinality of the kernel's bucket key: it
+    caps the shuffle partitions that hold data, while AQE sizes the stage
+    and the kernel runs once per Arrow batch, so B adds no per-call Python
+    cost (the former one-call-per-bucket cogroup paid ~18 ms per bucket:
+    0.28 s, 0.79 s and 2.50 s of Python time for the same 84,416 rows at
+    4, 32 and 128 buckets). Keep B ≫ total cores so every partition gets
+    data and no task straggles behind a few large buckets."""
     ch = image_channels(images, with_pixel_stats=with_pixel_stats)
     snaps = snapshots.select("image_id", "snapshot_ts", "snapshot_id")
     extra_cols = ["caption_len", "aspect"] + (

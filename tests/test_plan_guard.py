@@ -36,16 +36,20 @@ EMB = ["embedding", "vec_id"]
 
 # (exchanges, bcast, smj, nlj, pushed, pyrow, arrow, scan_fields)
 EXPECTED: dict[str, tuple] = {
-    # flagship pair: bytes/value pruned pre-shuffle. The salted path is
+    # flagship pair: bytes/value pruned pre-shuffle. pit_fused unions events
+    # and snapshots into ONE exchange feeding a sorted-stream MapInPandas
+    # kernel (was 2: a cogroup shuffled each side). The salted path is
     # the round-6 rework: JVM summaries + JVM carry windows + ONE bucketed
     # margin-row kernel — 2 Arrow stages total (was 6) and ZERO broadcast
     # (the former broadcast of the carry table was an at-scale hazard in
     # all-salted mode); 6 physical exchanges, but only 2 move the events
     # (summaries window + kernel cogroup), the rest move the tiny
     # chunk-summary table
-    "pit_fused": (4, 0, 0, 0, 1, 0, 2, [EVV, EV]),
+    "pit_fused": (2, 0, 0, 0, 1, 0, 2, [EVV, EV]),
     "pit_salted": (12, 0, 0, 0, 2, 0, 2, [EVV, EV, EVV, EV]),
-    "image_pit_checksums": (8, 0, 0, 0, 0, 0, 4, []),  # fixture-gen input
+    # fixture-gen input; the PIT kernel's two cogroup exchanges became
+    # its one union exchange (8 -> 6 mentions)
+    "image_pit_checksums": (6, 0, 0, 0, 0, 0, 4, []),
     # star-edge dedup (round-7 rework): candidates+verify are join-free
     # (carried token arrays + window min(struct)), CC rounds run eagerly
     # behind localCheckpoints, and cluster_size is a window count on the
