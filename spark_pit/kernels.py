@@ -1,76 +1,20 @@
-"""Vectorized NumPy kernels used inside applyInPandas passes.
+"""Whole-entity descriptor formulas as vectorized NumPy kernels: lag-k
+token pair counts, the autocorrelation family, cross-covariance and token
+distribution positions.
 
-Each kernel is the leakage-free re-expression of one reference descriptor
-shape (SURVEY.md §2) on a single entity's time-ordered arrays. All kernels
-are pure NumPy — no per-row Python (input_hint mandate). They assume the
-caller has already sorted by (ts, tiebreak) ascending.
+Each kernel is the re-expression of one reference descriptor shape
+(SURVEY.md §2) on a single entity's time-ordered arrays, checked against
+loop-level oracles in tests/test_kernels.py. All kernels are pure NumPy — no
+per-row Python (input_hint mandate). They assume the caller has already
+sorted by (ts, tiebreak) ascending.
 
-Reference parity notes cite /root/reference/feature.py line ranges; we keep
-the formulas, flipped from the reference's forward windows to backward
-(leakage-free) windows per the re-targeting contract in SURVEY.md §0.
+Reference parity notes cite line ranges of the reference's feature.py,
+whose formulas the kernels keep.
 """
 
 from __future__ import annotations
 
 import numpy as np
-
-
-def asof_indices(event_ts: np.ndarray, snap_ts: np.ndarray, strict: bool = True) -> np.ndarray:
-    """For each event timestamp, index of the latest snapshot with
-    snap_ts < event_ts (strict) or <= (non-strict); -1 when none.
-
-    Both inputs must be sorted ascending. This is the single-pass merge
-    cursor of the north rule, expressed as a binary search (O(n log m),
-    branch-free, vectorized).
-    """
-    side = "left" if strict else "right"
-    idx = np.searchsorted(snap_ts, event_ts, side=side) - 1
-    return idx
-
-
-def session_ids(ts_us: np.ndarray, gap_us: int) -> np.ndarray:
-    """Gap-based sessionization: new session when inter-arrival > gap.
-
-    Batch analogue of a session window (SURVEY.md §2.10): cumsum over the
-    gap indicator. Returns 0-based session ids per event.
-    """
-    if len(ts_us) == 0:
-        return np.zeros(0, dtype=np.int64)
-    brk = np.empty(len(ts_us), dtype=np.int64)
-    brk[0] = 0
-    brk[1:] = (np.diff(ts_us) > gap_us).astype(np.int64)
-    return np.cumsum(brk)
-
-
-def forward_fill(values: np.ndarray) -> np.ndarray:
-    """Backfill nulls with the most recent non-null value (last_value
-    IGNORE NULLS semantics); leading nulls stay NaN."""
-    mask = ~np.isnan(values)
-    idx = np.where(mask, np.arange(len(values)), -1)
-    np.maximum.accumulate(idx, out=idx)
-    out = np.where(idx >= 0, values[idx.clip(0)], np.nan)
-    return out
-
-
-def rolling_token_counts(codes: np.ndarray, n_tokens: int, width: int) -> np.ndarray:
-    """EAAC analogue (reference feature.py:456-485): for each event i, the
-    composition vector of token codes over the trailing window
-    [i-width+1, i], divided by the actual window size (short head windows
-    divide by their true length, not `width`).
-
-    Vectorized: one-hot cumsum; window count = cs[i] - cs[i-width].
-    Returns (n, n_tokens) float64.
-    """
-    n = len(codes)
-    onehot = np.zeros((n, n_tokens), dtype=np.int64)
-    valid = codes >= 0
-    onehot[np.arange(n)[valid], codes[valid]] = 1
-    cs = np.cumsum(onehot, axis=0)
-    out = cs.astype(np.float64)
-    if n > width:
-        out[width:] -= cs[:-width]
-    sizes = np.minimum(np.arange(1, n + 1), width).astype(np.float64)
-    return out / sizes[:, None]
 
 
 def lagk_pair_counts(codes: np.ndarray, n_tokens: int, k: int) -> np.ndarray:

@@ -1,19 +1,13 @@
 """Point-in-time (as-of) join — the engine's core operator.
 
-Spark has no SQL ASOF JOIN; we provide two implementations with identical
-semantics (tested equal, oracle'd against DuckDB ASOF JOIN):
-
-1. ``asof_join_window`` — pure JVM path: tag + union + ``last(ignorenulls)``
-   over a (key, ts, tag) window. One shuffle, whole-stage codegen, no Python.
-   This is the default: at 100 TB it is a single sort-based exchange that AQE
-   can skew-split, and the `bytes` payload column (if any) must be projected
-   away by the caller before it (SURVEY.md §7 hard-point 3).
-
-2. ``asof_join_cursor`` — the sort-merge cursor the north rule names:
-   ``left.groupBy(k).cogroup(right.groupBy(k)).applyInPandas`` with a
-   vectorized ``searchsorted`` merge per entity (kernels.asof_indices).
-   Preferable when the caller is already fusing many per-entity kernels into
-   one pass (see operators/pit.py) — the shuffle is paid once for all of them.
+Spark has no SQL ASOF JOIN. The backward join is ``asof_join_window``
+(oracle'd against DuckDB ASOF JOIN), a pure JVM path: tag + union +
+``last(ignorenulls)`` over a (key, ts, tag) window. One shuffle, whole-stage
+codegen, no Python: at 100 TB it is a single sort-based exchange that AQE
+can skew-split, and the `bytes` payload column (if any) must be projected
+away by the caller before it (SURVEY.md §7 hard-point 3). The fused PIT
+kernel (operators/pit.py) does its own as-of match inside the one pass
+that computes every other feature.
 
 Tie semantics (SURVEY.md §7 hard-point 1): ``strict=True`` (default) matches
 only snapshots with ``snapshot_ts`` **strictly before** ``event_ts`` — the
@@ -24,13 +18,8 @@ latest in ``right_order`` wins.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from spark_pit import kernels
 
 _TAG = "__pit_tag"
 _SEQ = "__pit_seq"
@@ -239,62 +228,6 @@ def asof_join_forward(
     for c in [*carried, f"{prefix}ts"]:
         unioned = unioned.withColumn(c, F.first(c, ignorenulls=True).over(w))
     return unioned.where(F.col(_TAG) == left_tag).drop(_TAG, _SEQ)
-
-
-def asof_join_cursor(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str],
-    left_ts: str,
-    right_ts: str,
-    value_cols: list[str],
-    strict: bool = True,
-    prefix: str = "asof_",
-    right_order: str | None = None,
-) -> DataFrame:
-    """As-of join via cogrouped sort-merge cursor (applyInPandas)."""
-    out_fields = list(left.schema.fields)
-    right_schema = {f.name: f for f in right.schema.fields}
-    for c in value_cols:
-        out_fields.append(T.StructField(f"{prefix}{c}", right_schema[c].dataType, True))
-    out_fields.append(T.StructField(f"{prefix}ts", right_schema[right_ts].dataType, True))
-    out_schema = T.StructType(out_fields)
-    left_cols = [f.name for f in left.schema.fields]
-    r_sort = [right_ts] + ([right_order] if right_order else [])
-
-    def merge(l: pd.DataFrame, r: pd.DataFrame) -> pd.DataFrame:
-        if len(l) == 0:
-            return pd.DataFrame(columns=[f.name for f in out_fields])
-        l = l.sort_values(left_ts, kind="stable").reset_index(drop=True)
-        out = l[left_cols].copy()
-        if len(r) == 0:
-            for c in value_cols:
-                out[f"{prefix}{c}"] = None
-            out[f"{prefix}ts"] = pd.NaT
-            return out
-        r = r.sort_values(r_sort, kind="stable").reset_index(drop=True)
-        idx = kernels.asof_indices(
-            l[left_ts].to_numpy().astype("datetime64[us]").astype(np.int64),
-            r[right_ts].to_numpy().astype("datetime64[us]").astype(np.int64),
-            strict=strict,
-        )
-        matched = idx >= 0
-        take = idx.clip(0)
-        for c in value_cols:
-            vals = r[c].to_numpy()[take]
-            col = pd.Series(list(vals), dtype=object)
-            col[~matched] = None
-            out[f"{prefix}{c}"] = col
-        ts_col = pd.Series(r[right_ts].to_numpy()[take])
-        ts_col[~matched] = pd.NaT
-        out[f"{prefix}ts"] = ts_col
-        return out
-
-    return (
-        left.groupBy(*on)
-        .cogroup(right.groupBy(*on))
-        .applyInPandas(merge, schema=out_schema)
-    )
 
 
 def asof_join_multi(

@@ -16,9 +16,10 @@ feature vectorized once per Arrow batch. On a cluster the equivalent declarative
 plan would pay one exchange per window family; the fused pass pays exactly
 one, which is the reason this operator exists.
 
-A declarative twin (``pit_features_declarative``) builds the same columns
-from the windows/asof operator library; tests assert both paths are equal
-and the DuckDB oracle validates the declarative one.
+The reference semantics are those of the declarative twin
+(``pit_features_declarative``), which builds the same columns from the
+windows/asof operator library and is validated by the DuckDB oracle; tests
+assert the fused kernel and the salted path (operators/skew.py) equal it.
 """
 
 from __future__ import annotations
@@ -29,119 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from spark_pit import kernels
 from spark_pit.operators import windows
 from spark_pit.operators.asof import asof_join_window
-
-
-def pit_features_cursor(
-    events: DataFrame,
-    snapshots: DataFrame,
-    entity: str,
-    ts: str,
-    numeric_col: str,
-    token_col: str,
-    vocab: list[str],
-    snap_ts: str = "snapshot_ts",
-    snap_id: str = "snapshot_id",
-    gap_seconds: int = 1800,
-    width: int = 5,
-    tiebreak: str | None = None,
-) -> DataFrame:
-    """Fused single-pass pipeline. Output one row per event."""
-    code = {t: i for i, t in enumerate(vocab)}
-    V = len(vocab)
-    ent_type = events.schema[entity].dataType.simpleString()
-    tb = [tiebreak] if tiebreak else []
-    tb_field = (
-        f"{tiebreak} {events.schema[tiebreak].dataType.simpleString()}, " if tiebreak else ""
-    )
-    out_schema = (
-        f"{entity} {ent_type}, {ts} timestamp_ntz, {tb_field}"
-        f"{numeric_col} double, {token_col} string, "
-        f"asof_snapshot_id long, asof_age_sec double, "
-        f"lag1_{numeric_col} double, lead1_{numeric_col} double, "
-        f"session_id long, session_pos long, "
-        f"{numeric_col}_bf double, roll_mean_{numeric_col} double, "
-        f"wc array<double>"
-    )
-    gap_us = gap_seconds * 1_000_000
-
-    def kern(ev: pd.DataFrame, sn: pd.DataFrame) -> pd.DataFrame:
-        if len(ev) == 0:
-            return pd.DataFrame(
-                columns=[f.strip().split(" ")[0] for f in out_schema.split(",")]
-            )
-        ev = ev.sort_values([ts, *tb], kind="stable").reset_index(drop=True)
-        ts_us = ev[ts].to_numpy().astype("datetime64[us]").astype(np.int64)
-        x = ev[numeric_col].to_numpy(dtype=np.float64)
-        codes = ev[token_col].map(code).fillna(-1).to_numpy(dtype=np.int64)
-        n = len(ev)
-
-        out = pd.DataFrame(
-            {
-                entity: ev[entity],
-                ts: ev[ts],
-                **({tiebreak: ev[tiebreak]} if tiebreak else {}),
-                numeric_col: ev[numeric_col],
-                token_col: ev[token_col],
-            }
-        )
-        # --- as-of (strictly before; latest snapshot_id wins ties) ---
-        if len(sn):
-            sn = sn.sort_values([snap_ts, snap_id], kind="stable").reset_index(drop=True)
-            sts = sn[snap_ts].to_numpy().astype("datetime64[us]").astype(np.int64)
-            idx = kernels.asof_indices(ts_us, sts, strict=True)
-            matched = idx >= 0
-            take = idx.clip(0)
-            sid = pd.Series(sn[snap_id].to_numpy(dtype=np.int64)[take], dtype="Int64")
-            sid[~matched] = pd.NA
-            age = (ts_us - sts[take]) / 1e6
-            age[~matched] = np.nan
-            out["asof_snapshot_id"] = sid
-            out["asof_age_sec"] = age
-        else:
-            out["asof_snapshot_id"] = pd.array([pd.NA] * n, dtype="Int64")
-            out["asof_age_sec"] = np.nan
-
-        # --- lag/lead ---
-        lag1 = np.roll(x, 1); lag1[0] = np.nan
-        lead1 = np.roll(x, -1); lead1[-1] = np.nan
-        out[f"lag1_{numeric_col}"] = lag1
-        out[f"lead1_{numeric_col}"] = lead1
-
-        # --- sessionization ---
-        sess = kernels.session_ids(ts_us, gap_us)
-        out["session_id"] = sess
-        # position within session: index - first index of session
-        first_idx = np.zeros(n, dtype=np.int64)
-        starts = np.flatnonzero(np.diff(sess, prepend=sess[0] - 1) > 0)
-        first_idx[starts] = starts
-        np.maximum.accumulate(first_idx, out=first_idx)
-        out["session_pos"] = np.arange(n) - first_idx
-
-        # --- backfill + rolling mean ---
-        out[f"{numeric_col}_bf"] = kernels.forward_fill(x)
-        cs = np.nancumsum(np.nan_to_num(x))
-        cnt = np.cumsum(~np.isnan(x))
-        roll_sum = cs.copy()
-        roll_cnt = cnt.astype(np.float64)
-        if n > width:
-            roll_sum[width:] -= cs[:-width]
-            roll_cnt[width:] -= cnt[:-width]
-        with np.errstate(invalid="ignore", divide="ignore"):
-            out[f"roll_mean_{numeric_col}"] = np.where(
-                roll_cnt > 0, roll_sum / roll_cnt, np.nan
-            )
-
-        # --- trailing window composition (EAAC analogue) ---
-        wc = kernels.rolling_token_counts(codes, V, width)
-        out["wc"] = list(wc)
-        return out
-
-    ev = events.select(entity, ts, *tb, numeric_col, token_col)
-    sn = snapshots.select(entity, snap_ts, snap_id)
-    return ev.groupBy(entity).cogroup(sn.groupBy(entity)).applyInPandas(kern, out_schema)
 
 
 def _seg_starts(ids: np.ndarray) -> np.ndarray:
@@ -194,7 +84,7 @@ def pit_features_bucketed(
     num_buckets: int = 256,
     passthrough: list[str] | None = None,
 ) -> DataFrame:
-    """pit_features_cursor semantics over ONE sorted stream per partition,
+    """pit_features_declarative semantics over ONE sorted stream per partition,
     with **segment-vectorized** NumPy — zero per-entity Python. This is the
     production path; hot entities go through spark_pit.operators.skew.
 
@@ -203,9 +93,9 @@ def pit_features_bucketed(
     ``num_buckets`` is the key's cardinality (it caps the partitions that
     hold data; AQE sizes the stage). The JVM sorts each partition by
     entity and ``mapInPandas`` runs the kernel once per Arrow batch, not
-    once per bucket (the former cogroup's Python workers ran 0.28 s, 0.79 s
-    and 2.50 s on the same 84,416 rows at 4, 32 and 128 buckets: ~18 ms
-    per call). An entity spanning batches is held as chunks and processed
+    once per bucket (a pandas call per bucket costs ~18 ms of Python worker
+    time: 0.28 s, 0.79 s and 2.50 s on the same 84,416 rows at 4, 32 and
+    128 buckets). An entity spanning batches is held as chunks and processed
     once, when it closes. Within entities one numpy lexsort orders rows by
     (ts, tag, tiebreak, snapshot id): a JVM sort on all those keys took
     12.4 s of task time at 6.4M rows, against 0.5 s for the entity alone.
@@ -214,7 +104,8 @@ def pit_features_bucketed(
     every window feature is a cumulative-array expression clipped at it.
     The as-of match is a forward-fill of the latest snapshot row: snapshots
     order after events at equal ts (strictly before) and by ascending id
-    (the max id wins ties). Equivalence with the cursor is asserted in tests.
+    (the max id wins ties). Equality with the declarative twin is asserted
+    in tests (tests/test_bucketed.py).
     """
     if not vocab:
         raise ValueError("pit_features_bucketed: vocab is empty (no wc columns)")
@@ -364,9 +255,10 @@ def pit_features_declarative(
     width: int = 5,
     tiebreak: str | None = None,
 ) -> DataFrame:
-    """Same columns as pit_features_cursor, built from the declarative
-    operator library (window functions + union-based as-of). Used as the
-    in-engine cross-check and the DuckDB-oracle side."""
+    """The reference PIT semantics: the fused kernel's columns built from
+    the declarative operator library (window functions + union-based
+    as-of). The in-engine cross-check of the fused and salted paths, and
+    the DuckDB-oracle side."""
     ev = events.select(entity, ts, *([tiebreak] if tiebreak else []), numeric_col, token_col)
     df = asof_join_window(
         ev, snapshots, [entity], ts, snap_ts, [snap_id],

@@ -271,46 +271,6 @@ def ann_mllib_lsh(
     )
 
 
-def _banded_signatures(
-    df: DataFrame, id_col: str, vec_col: str,
-    bands: int, band_bits: int, seed: int,
-) -> DataFrame:
-    """(id, band, sig): per vector, one row per LSH band with the band's
-    packed sign-bit signature from seeded random hyperplanes. The whole
-    projection is ONE Arrow-batched NumPy matmul per batch ((N×d)@(d×B·k)
-    then a sign-bit pack) — the Catalyst expression-tree formulation of the
-    same math (B·k nested zip_with/aggregate folds per row) evaluates
-    interpreted per element and measured ~5× slower at sf0.1. The plane
-    matrix is rebuilt per executor from the seed — tiny and deterministic."""
-    import pandas as pd
-    from collections.abc import Iterator
-
-    dim = len(df.select(vec_col).first()[0])
-    n_planes, bb, bands_n = bands * band_bits, band_bits, bands
-    id_type = df.schema[id_col].dataType.simpleString()
-
-    def sig_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        planes = np.asarray(_hyperplanes(n_planes, dim, seed)).T  # d × B·k
-        pw = np.array([2**j for j in range(bb)], dtype=np.int64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            bits = (m @ planes > 0).reshape(len(m), bands_n, bb)
-            sigs = (bits * pw).sum(axis=2).astype(np.int32)  # N × bands
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(pdf[id_col].to_numpy(), bands_n),
-                    "band": np.tile(np.arange(bands_n, dtype=np.int32), len(m)),
-                    "sig": sigs.ravel(),
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(
-        sig_kernel, schema=f"{id_col} {id_type}, band int, sig int"
-    )
-
-
 def embedding_neardup(
     df: DataFrame,
     id_col: str,
@@ -351,7 +311,10 @@ def embedding_neardup(
     pair colliding in k bands costs k fused multiply-adds, not a shuffle
     row). Per-bucket minima then take one tiny groupBy(qid) min. The
     candidate SET is identical to the join formulation by construction, so
-    output equality holds wherever the old path was oracle-certified."""
+    output equality holds wherever the old path was oracle-certified, up to
+    pairs lying exactly on the threshold: NumPy and Spark may round such a
+    cosine differently in the last float bit. All-zero vectors match
+    nothing, as in ``embedding_neardup_exact``."""
     import pandas as pd
     from collections.abc import Iterator
 
@@ -411,9 +374,9 @@ def embedding_neardup(
             b"".join(pdf["vb"].to_numpy()[order].tolist()), dtype=vdtype
         ).reshape(n, -1).astype(np.float64)
         # exact normalized vectors: cos(i,j) = (v_i/|v_i|)·(v_j/|v_j|);
-        # 0-norm rows (all-zero vectors) can never clear a positive
-        # threshold — give them an infinite norm so they match nothing,
-        # exactly like the join formulation's NaN cos comparison
+        # 0-norm rows (all-zero vectors) have no cosine — give them an
+        # infinite norm so they match nothing, as embedding_neardup_exact
+        # drops them before its self-join
         norms = np.sqrt((m * m).sum(axis=1))
         norms[norms == 0.0] = np.inf
         v = m / norms[:, None]
@@ -460,8 +423,12 @@ def embedding_neardup_exact(
 ) -> DataFrame:
     """Brute-force all-pairs twin of embedding_neardup — O(N²) BY DESIGN,
     the small-N calibration baseline the LSH path's recall is tested
-    against (tests/test_similarity). Never the production path."""
-    base = with_norm(df.select(id_col, vec_col), id_col, vec_col)
+    against (tests/test_similarity). Never the production path. All-zero
+    vectors have no cosine: they are dropped before the self-join, so they
+    match nothing (a 0/0 cosine raises DIVIDE_BY_ZERO under ANSI mode)."""
+    base = with_norm(df.select(id_col, vec_col), id_col, vec_col).where(
+        F.col("norm") > 0
+    )
     a = base.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"), F.col("norm").alias("qn"))
     b = base.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"), F.col("norm").alias("nn"))
     pairs = a.join(b, F.col("nid") < F.col("qid")).select(

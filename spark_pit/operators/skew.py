@@ -4,11 +4,11 @@ skew-join hints").
 
 The reference is single-threaded so skew cannot exist there (SURVEY.md §4
 "skew handling: n/a"); at 10^12-row scale a hot entity whose timeline
-exceeds one task's memory/time budget is the dominant failure mode of the
-``groupBy(entity).applyInPandas`` cursor. This module splits hot entities
+exceeds one task's memory/time budget is the dominant failure mode of any
+pass that holds a whole entity in one task. This module splits hot entities
 into **time chunks** (the salt = ``floor(ts / chunk_seconds)``) so one
-entity's timeline fans out over many tasks, while keeping the output
-*bit-identical* to the unsalted cursor:
+entity's timeline fans out over many tasks, while keeping the output equal
+to the unsalted reference, ``pit.pit_features_declarative``:
 
 1. **Chunk summaries** — one tiny row per (entity, chunk): row count,
    first/last ts, the trailing ``width-1`` (ts, value, token) rows, last
@@ -34,9 +34,9 @@ entity's timeline fans out over many tasks, while keeping the output
    the right side (no broadcast of the carry table — in all-salted
    equivalence mode it is O(populated chunks), far past broadcast size),
    carried tails are materialized as margin rows, and every feature runs
-   segment-vectorized over (entity, chunk) segments like
-   pit_features_bucketed — one pandas call per bucket, B in total,
-   independent of how many (entity, chunk) groups exist.
+   segment-vectorized over (entity, chunk) segments with
+   pit_features_bucketed's segment trick — one pandas call per bucket, B in
+   total, independent of how many (entity, chunk) groups exist.
 
 Equivalence proof sketch per feature (tests assert it empirically):
 - lag1 / rolling(width) / window-composition(width): any trailing
@@ -66,24 +66,6 @@ CHUNK = "__chunk"
 
 def _to_us(series: pd.Series) -> np.ndarray:
     return series.to_numpy().astype("datetime64[us]").astype(np.int64)
-
-
-def hot_entities(
-    events: DataFrame, entity: str, threshold: int
-) -> list:
-    """Entity keys whose event count exceeds ``threshold`` — EXACT
-    detection via a full per-key groupBy (driver-side list; hot keys are
-    few by definition). At 10^9+ distinct keys the groupBy's hash state
-    is the bottleneck; prefer hot_entities_countmin, which is
-    constant-memory and never misses a hot key w.h.p."""
-    rows = (
-        events.groupBy(entity)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > threshold)
-        .select(entity)
-        .collect()
-    )
-    return [r[0] for r in rows]
 
 
 def hot_entities_countmin(
@@ -176,21 +158,16 @@ def pit_features_salted(
     hot_ids: list | None = None,
     hot_threshold: int | None = None,
     tiebreak: str | None = None,
-    hot_detector: str = "countmin",
     num_buckets: int = 256,
 ) -> DataFrame:
-    """pit_features_cursor semantics with hot entities salted by time chunk.
+    """pit_features_declarative semantics with hot entities salted by time
+    chunk.
 
-    ``hot_ids`` (explicit) or ``hot_threshold`` (count-based detection)
-    select the salted population; everything else takes the unsalted
-    single-group path. With ``hot_ids=None, hot_threshold=None`` every
-    entity is salted (used by the equivalence tests).
-
-    ``hot_detector`` picks the detection plan when ``hot_threshold`` is
-    set: "countmin" (default — constant-memory CMS + sampled candidates,
-    the only shape that survives 10^9 distinct keys) or "exact" (full
-    per-key groupBy; useful as the audit baseline). Detection only
-    ROUTES keys; either detector yields identical output.
+    ``hot_ids`` (explicit) or ``hot_threshold`` (count-min detection,
+    hot_entities_countmin) select the salted population; everything else
+    takes the unsalted pit_features_bucketed path. With ``hot_ids=None,
+    hot_threshold=None`` every entity is salted (used by the equivalence
+    tests).
     """
     from spark_pit.operators.pit import pit_features_bucketed
 
@@ -199,12 +176,7 @@ def pit_features_salted(
     sn = snapshots.select(entity, snap_ts, snap_id)
 
     if hot_ids is None and hot_threshold is not None:
-        if hot_detector == "countmin":
-            hot_ids = hot_entities_countmin(ev, entity, hot_threshold)
-        elif hot_detector == "exact":
-            hot_ids = hot_entities(ev, entity, hot_threshold)
-        else:
-            raise ValueError(f"unknown hot_detector {hot_detector!r}")
+        hot_ids = hot_entities_countmin(ev, entity, hot_threshold)
 
     if hot_ids is not None:
         if not hot_ids:
@@ -284,12 +256,12 @@ def _salted_path(
        O(populated chunks), far past broadcast size). Inside the kernel
        the carried tails are materialized as margin rows, concatenated
        with the bucket's body rows, and every feature runs
-       segment-vectorized over (entity, chunk) segments like
-       pit_features_bucketed — one pandas call per bucket, B in total,
-       independent of how many (entity, chunk) groups exist.
+       segment-vectorized over (entity, chunk) segments with
+       pit_features_bucketed's segment trick — one pandas call per bucket,
+       B in total, independent of how many (entity, chunk) groups exist.
 
-    Bit-identical to pit_features_cursor by the same margin/carry
-    algebra as before (module docstring); tests/test_skew.py asserts it.
+    Equal to pit_features_declarative by the margin/carry algebra of the
+    module docstring; tests/test_skew.py asserts it.
     """
     from pyspark.sql import Window
 

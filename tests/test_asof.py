@@ -1,5 +1,5 @@
-"""As-of join semantics: strict-vs-nonstrict ties, null matches, and the
-equality of the window-plan and merge-cursor implementations; plus the
+"""As-of join semantics: strict-vs-nonstrict ties and null matches of the
+window-plan join, its nearest/forward/multi-group variants, and the
 zero-temporal-leakage property the north rule requires."""
 
 from __future__ import annotations
@@ -11,7 +11,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from spark_pit.operators.asof import asof_join_cursor, asof_join_window
+from spark_pit.operators.asof import asof_join_window
 
 
 def _t(s: int) -> dt.datetime:
@@ -47,7 +47,7 @@ def _collect(df):
     return {r["eid"]: r["asof_sid"] for r in df.collect()}
 
 
-@pytest.mark.parametrize("impl", [asof_join_window, asof_join_cursor])
+@pytest.mark.parametrize("impl", [asof_join_window])
 def test_strict_excludes_equal_ts(tiny, impl):
     left, right = tiny
     out = impl(left, right, ["k"], "ts", "sts", ["sid"], strict=True, right_order="sid")
@@ -56,38 +56,12 @@ def test_strict_excludes_equal_ts(tiny, impl):
     assert got == {1: None, 2: None, 3: 101, 4: None, 5: None}
 
 
-@pytest.mark.parametrize("impl", [asof_join_window, asof_join_cursor])
+@pytest.mark.parametrize("impl", [asof_join_window])
 def test_nonstrict_includes_equal_ts(tiny, impl):
     left, right = tiny
     out = impl(left, right, ["k"], "ts", "sts", ["sid"], strict=False, right_order="sid")
     got = _collect(out)
     assert got == {1: None, 2: 100, 3: 101, 4: None, 5: None}
-
-
-def test_window_and_cursor_agree_on_real_data(spark, sf_dir):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    snaps = ev.where("event_type = 'purchase'").selectExpr(
-        "user_id", "ts as snapshot_ts", "event_id as snapshot_id", "value as snap_value"
-    )
-    kw = dict(
-        on=["user_id"], left_ts="ts", right_ts="snapshot_ts",
-        value_cols=["snapshot_id", "snap_value"], strict=True, right_order="snapshot_id",
-    )
-    a = (
-        asof_join_window(ev, snaps, **kw)
-        .orderBy("event_id")
-        .toPandas()
-        .reset_index(drop=True)
-    )
-    b = (
-        asof_join_cursor(ev, snaps, **kw)
-        .orderBy("event_id")
-        .toPandas()
-        .reset_index(drop=True)
-    )
-    assert len(a) == len(b) == ev.count()
-    for c in ["asof_snapshot_id", "asof_snap_value", "asof_ts"]:
-        pd.testing.assert_series_equal(a[c], b[c], check_dtype=False)
 
 
 def test_zero_temporal_leakage(spark, sf_dir):

@@ -1,4 +1,5 @@
-"""Bucketed (segment-vectorized) fused kernel == per-entity cursor."""
+"""Bucketed (segment-vectorized) fused kernel == the declarative reference
+twin (window functions + union-based as-of)."""
 
 from __future__ import annotations
 
@@ -8,7 +9,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from spark_pit.operators.pit import pit_features_bucketed, pit_features_cursor
+from spark_pit.operators.pit import pit_features_bucketed, pit_features_declarative
 
 VOCAB = ["click", "error", "purchase", "signup", "view"]
 
@@ -40,14 +41,14 @@ def _cmp(a: pd.DataFrame, b: pd.DataFrame):
             assert a[c].astype(str).equals(b[c].astype(str)), c
 
 
-def test_bucketed_equals_cursor(spark, sf_dir):
+def test_bucketed_equals_declarative(spark, sf_dir):
     ev, snaps = _frames(spark, sf_dir)
     kw = dict(
         entity="user_id", ts="ts", numeric_col="value",
         token_col="event_type", vocab=VOCAB, gap_seconds=1800, width=5,
         tiebreak="event_id",
     )
-    a = pit_features_cursor(ev, snaps, **kw).toPandas()
+    a = pit_features_declarative(ev, snaps, **kw).toPandas()
     b = pit_features_bucketed(ev, snaps, num_buckets=7, **kw).toPandas()
     _cmp(a, b)
 
@@ -60,7 +61,7 @@ def test_bucketed_single_bucket(spark, sf_dir):
         token_col="event_type", vocab=VOCAB, gap_seconds=1800, width=5,
         tiebreak="event_id",
     )
-    a = pit_features_cursor(ev, snaps, **kw).toPandas()
+    a = pit_features_declarative(ev, snaps, **kw).toPandas()
     b = pit_features_bucketed(ev, snaps, num_buckets=1, **kw).toPandas()
     _cmp(a, b)
 
@@ -138,13 +139,13 @@ def _edge_frames(spark):
 
 
 def test_bucketed_batch_boundaries(spark):
-    """Entities and snapshots split across Arrow batches give the cursor's
-    output, with a single tiebreak column and with the list-plus-
-    passthrough form the image pipeline uses."""
+    """Entities and snapshots split across Arrow batches give the
+    declarative twin's output, with a single tiebreak column and with the
+    list-plus-passthrough form the image pipeline uses."""
     ev, snaps, evp = _edge_frames(spark)
     kw = dict(entity="user_id", ts="ts", numeric_col="value",
               token_col="event_type", vocab=VOCAB, gap_seconds=1800, width=5)
-    want = pit_features_cursor(ev, snaps, tiebreak="event_id", **kw).toPandas()
+    want = pit_features_declarative(ev, snaps, tiebreak="event_id", **kw).toPandas()
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prior = spark.conf.get(key)
     spark.conf.set(key, str(BATCH))

@@ -9,63 +9,8 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from hypothesis import given, settings
-from hypothesis import strategies as st
 
 from spark_pit import kernels
-
-
-def test_asof_indices_strict_vs_nonstrict():
-    snap = np.array([10, 20, 20, 30])
-    ev = np.array([5, 10, 15, 20, 25, 30, 35])
-    strict = kernels.asof_indices(ev, snap, strict=True)
-    assert strict.tolist() == [-1, -1, 0, 0, 2, 2, 3]
-    nonstrict = kernels.asof_indices(ev, snap, strict=False)
-    assert nonstrict.tolist() == [-1, 0, 0, 2, 2, 3, 3]
-
-
-@given(
-    st.lists(st.integers(0, 1000), min_size=0, max_size=50),
-    st.lists(st.integers(0, 1000), min_size=0, max_size=50),
-)
-@settings(max_examples=100, deadline=None)
-def test_asof_indices_property(ev, snap):
-    ev = np.sort(np.array(ev, dtype=np.int64))
-    snap = np.sort(np.array(snap, dtype=np.int64))
-    idx = kernels.asof_indices(ev, snap, strict=True)
-    for i, t in enumerate(ev):
-        want = -1
-        for j, s in enumerate(snap):
-            if s < t:
-                want = j
-        assert idx[i] == want
-
-
-def test_session_ids():
-    ts = np.array([0, 10, 2000, 2005, 9000], dtype=np.int64)
-    assert kernels.session_ids(ts, gap_us=1000).tolist() == [0, 0, 1, 1, 2]
-    assert kernels.session_ids(np.array([], dtype=np.int64), 10).tolist() == []
-    assert kernels.session_ids(np.array([5], dtype=np.int64), 10).tolist() == [0]
-
-
-def test_forward_fill():
-    x = np.array([np.nan, 1.0, np.nan, np.nan, 2.0, np.nan])
-    out = kernels.forward_fill(x)
-    assert np.isnan(out[0])
-    assert out[1:].tolist() == [1.0, 1.0, 1.0, 2.0, 2.0]
-
-
-def test_rolling_token_counts_matches_loop():
-    rng = np.random.default_rng(7)
-    codes = rng.integers(0, 4, size=37)
-    width = 5
-    out = kernels.rolling_token_counts(codes, 4, width)
-    for i in range(len(codes)):
-        lo = max(0, i - width + 1)
-        window = codes[lo : i + 1]
-        size = len(window)
-        for t in range(4):
-            assert out[i, t] == pytest.approx(np.sum(window == t) / size)
 
 
 def test_lagk_pair_counts_matches_loop():

@@ -112,6 +112,27 @@ def test_embedding_neardup_lsh_matches_exact(spark):
     pd.testing.assert_frame_equal(g, w)
 
 
+def test_embedding_neardup_zero_vectors_match_nothing(spark):
+    """All-zero vectors have no cosine: both twins leave them unmarked
+    (and neither raises under ANSI mode), while a real near-duplicate
+    pair is still found."""
+    from spark_pit.operators.similarity import embedding_neardup, embedding_neardup_exact
+
+    v = [1.0, 2.0, 3.0, 4.0]
+    pdf = pd.DataFrame({
+        "vec_id": [1, 2, 3, 4],
+        "embedding": [[0.0] * 4, [0.0] * 4, v, [x + 0.01 for x in v]],
+    })
+    df = spark.createDataFrame(pdf, schema="vec_id long, embedding array<float>")
+    got = embedding_neardup(df, "vec_id", "embedding", threshold=0.9).toPandas()
+    want = embedding_neardup_exact(df, "vec_id", "embedding", threshold=0.9).toPandas()
+    g = got.sort_values("vec_id").reset_index(drop=True)
+    w = want.sort_values("vec_id").reset_index(drop=True)
+    assert g["is_dup"].tolist() == [False, False, False, True]
+    assert g.loc[3, "dup_of"] == 3
+    pd.testing.assert_frame_equal(g, w)
+
+
 def test_knn_ann_recall_vs_exact(spark, sf_dir):
     """Multi-probe LSH KNN: every emitted neighbor is a true training
     vector, fractions are k-denominated, and probe recall recovers most

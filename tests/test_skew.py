@@ -1,6 +1,6 @@
-"""Salted skew handling: the time-chunked (salted) PIT path must be
-bit-identical to the unsalted single-group cursor (north_rule: salted
-repartitioning for hot image_ids; SURVEY.md §7 step 5)."""
+"""Salted skew handling: the time-chunked (salted) PIT path must equal the
+unsalted declarative reference twin (north_rule: salted repartitioning for
+hot image_ids; SURVEY.md §7 step 5)."""
 
 from __future__ import annotations
 
@@ -11,8 +11,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from spark_pit.operators.pit import pit_features_cursor
-from spark_pit.operators.skew import hot_entities, pit_features_salted
+from spark_pit.operators.pit import pit_features_declarative
+from spark_pit.operators.skew import pit_features_salted
 
 VOCAB = ["view", "click", "purchase"]
 EPOCH = dt.datetime(2024, 1, 1)
@@ -74,7 +74,7 @@ def _assert_same(a: pd.DataFrame, b: pd.DataFrame):
 @pytest.mark.parametrize("chunk_seconds", [3600, 40000])
 def test_salted_equals_unsalted_all_entities(spark, chunk_seconds):
     ev, snaps = _mk(spark)
-    base = _collect(pit_features_cursor(
+    base = _collect(pit_features_declarative(
         ev, snaps, "user_id", "ts", "value", "event_type", VOCAB,
         gap_seconds=1800, width=5,
     ))
@@ -87,9 +87,7 @@ def test_salted_equals_unsalted_all_entities(spark, chunk_seconds):
 
 def test_hot_threshold_split_path(spark):
     ev, snaps = _mk(spark)
-    hot = hot_entities(ev, "user_id", threshold=1000)
-    assert hot == ["hot"]
-    base = _collect(pit_features_cursor(
+    base = _collect(pit_features_declarative(
         ev, snaps, "user_id", "ts", "value", "event_type", VOCAB,
         gap_seconds=1800, width=5,
     ))
@@ -163,29 +161,6 @@ def test_countmin_never_underestimates(spark):
         .toPandas().set_index("k")
     )
     assert (est["cm_est"].sort_index() == est2["cm_est"].sort_index()).all()
-
-
-def test_countmin_detector_default_no_exact_groupby(spark, monkeypatch):
-    """hot_detector defaults to "countmin": the exact full-key-space
-    groupBy (hot_entities) must never run, detection must still find the
-    hot key, and the routed output must equal the unsalted baseline."""
-    import spark_pit.operators.skew as skew
-
-    ev, snaps = _mk(spark)
-
-    def boom(*a, **k):  # the exact detector is the thing we're replacing
-        raise AssertionError("exact hot_entities called on the countmin path")
-
-    monkeypatch.setattr(skew, "hot_entities", boom)
-    base = _collect(pit_features_cursor(
-        ev, snaps, "user_id", "ts", "value", "event_type", VOCAB,
-        gap_seconds=1800, width=5,
-    ))
-    mixed = _collect(skew.pit_features_salted(
-        ev, snaps, "user_id", "ts", "value", "event_type", VOCAB,
-        gap_seconds=1800, width=5, chunk_seconds=7200, hot_threshold=1000,
-    ))
-    _assert_same(base, mixed)
 
 
 def test_countmin_detector_recall_and_sampled_plan(spark):
